@@ -58,12 +58,13 @@ in-memory compaction every `checkpoint_every` batches, and durable
 parquet versions written only by `DifferentialGraph.commit` so restore
 is always commit-consistent.
 
-Steady micro-batch ticks additionally run on the RESIDENT fast path
+Micro-batch ticks additionally run on the RESIDENT fast path
 (`resident.py`, on by default): the same delta algebra evaluated over
 driver-held dict-indexed state mirrors — the Spark-side analog of the
 reference's resident arrangements — with hard caps and automatic
 fallback to the distributed rules above for wide batches, over-cap
-state, and operators without a resident kernel.
+state, and operators without a resident kernel.  A fresh graph's first
+delta is no exception: it runs resident when it fits the caps.
 
 Scale notes: all state updates shuffle on the operator key only; the
 affected-key reduce touches |delta-keys| groups, not |state| groups;
@@ -174,6 +175,23 @@ def as_delta(df: DataFrame, *, diff: int = 1, time: int = 0) -> DataFrame:
     return df.select("*", *add) if add else df
 
 
+def _empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """Empty LocalRelation with `schema` (a Python or a JVM StructType)
+    built JVM-side — `createDataFrame([], schema)` parallelizes an
+    empty RDD, ~20 ms a frame."""
+    if isinstance(schema, T.StructType):
+        schema = spark._jsparkSession.parseDataType(schema.json())
+    return DataFrame(spark._jsparkSession.createDataFrame(
+        spark._jvm.java.util.ArrayList(), schema), spark)
+
+
+def _multiset_tpl(df: DataFrame) -> DataFrame:
+    """Empty frame of `df`'s data columns plus a long weight — the row
+    layout of a state store built from `df`, and of its slices."""
+    return df.filter(F.lit(False)).select(
+        *_ccs(_data_cols(df)), F.col(DIFF).cast("long").alias(DIFF))
+
+
 class _StateStore:
     """Accumulated multiset state for one node input — LSM-style.
 
@@ -227,6 +245,7 @@ class _StateStore:
         base = empty.select(*_data_cols(empty), F.col(DIFF).cast("long"))
         self._cols = base.columns
         self._jschema = base._jdf.schema()   # row layout of every chunk
+        self._empty_base = base
         self._chunks: list[DataFrame] = [base]
         # True while no appended chunk may contain NEGATIVE weights:
         # then the chunk union holds no +x/−x cancellation pairs, and
@@ -276,6 +295,13 @@ class _StateStore:
             self._pair_free = True
             self._clear_pending()
             self._res_dirty = False
+
+    def _never_written(self) -> bool:
+        """True while the store holds only its empty template base: no
+        loaded version, appended chunk, pending rows, compaction or
+        mirror sync has replaced it."""
+        return (self._pend_df is None and len(self._chunks) == 1
+                and self._chunks[0] is self._empty_base)
 
     def _load_version(self, want) -> None:
         """Load the version the graph's committed meta recorded (never
@@ -639,7 +665,9 @@ class DiffNode:
                     "drop it from arranged= to transform it")
         self._memo_t: int | None = None
         self._memo: DataFrame | None = None
-        self._empty_tpl: DataFrame | None = None  # set after 1st advance
+        # output schema memo: set by the 1st advance, or from the probe
+        # on a resident first step (DifferentialGraph._prime_fresh)
+        self._empty_tpl: DataFrame | None = None
         graph._nodes.append(self)
 
     # -- builder API ----------------------------------------------------
@@ -873,11 +901,16 @@ class DiffNode:
     def delta(self, t: int) -> DataFrame:
         if self._memo_t != t:
             if self.graph._res_last_t == t:
-                # batch t ran on the resident engine; a distributed
-                # advance now would re-apply the delta to synced state
-                raise RuntimeError(
-                    f"batch {t} was evaluated by the resident engine; "
-                    "this node was not part of the requested subgraph")
+                # batch t ran on the resident engine: hand out the delta
+                # it computed for this node — a distributed advance now
+                # would re-apply the delta to synced state
+                out = self.graph._res_engine.memo_df(self, t)
+                if out is None:
+                    raise RuntimeError(
+                        f"batch {t} was evaluated by the resident engine; "
+                        "this node was not part of the requested subgraph")
+                self._memo, self._memo_t = out, t
+                return out
             if self._empty_tpl is not None and self._empty_at(t):
                 out = self._empty_tpl
             else:
@@ -899,12 +932,36 @@ class DiffNode:
         raise NotImplementedError
 
     def _probe_frame(self) -> DataFrame:
-        """Empty frame with this node's OUTPUT delta schema, derived by
-        pushing source templates through the (stateless) chain — used
-        for build-time capability checks (e.g. multi-time fusion) that
-        need dtypes before any batch arrives.  Only defined for nodes
-        whose output schema is a pure function of their inputs'."""
+        """Empty frame with this node's OUTPUT delta schema — names,
+        order and types equal to the `_empty_tpl` a first distributed
+        batch memoizes — derived from the inputs' probes by analysis
+        only (no batch, no Spark job).  Used for build-time capability
+        checks (e.g. multi-time fusion) and to run a fresh graph's
+        first step on the resident engine.  Stateful nodes stamp the
+        batch time as their advance does (`DifferentialGraph.
+        _probe_time`).  Only defined for nodes whose output schema is a
+        pure function of their inputs'."""
         raise NotImplementedError(type(self).__name__)
+
+    _probe_memo: tuple | None = None
+
+    def _probe(self) -> DataFrame:
+        """Memoized `_probe_frame()`: the schema is fixed by the
+        topology except for the width of a stamped batch-time literal,
+        which keys the memo."""
+        key = self.graph._probe_time_long()
+        m = self._probe_memo
+        if m is None or m[0] != key:
+            m = self._probe_memo = (key, self._probe_frame())
+        return m[1]
+
+    def _ensure_stores(self, *tpls: DataFrame) -> None:
+        """Create this node's state stores (no-op for stateless nodes)
+        from frames carrying its inputs' schemas: the batch deltas on a
+        distributed advance, the inputs' probes on a resident first
+        step.  Idempotent; both paths create through it, so they write
+        to the same store objects, created in the same order (the
+        store numbering restore relies on)."""
 
 
 class SourceNode(DiffNode):
@@ -928,7 +985,11 @@ class SourceNode(DiffNode):
         return self._ins_only
 
     def _probe_frame(self) -> DataFrame:
-        return self._template
+        # the layout `_feed` gives every fed delta
+        return self._template.select(
+            *_data_cols(self._template),
+            F.col(DIFF).cast("long").alias(DIFF),
+            F.col(TIME).cast("long").alias(TIME))
 
     def _feed(self, delta: DataFrame | None, t: int,
               row_times: bool = False) -> None:
@@ -1054,13 +1115,18 @@ class _LinearNode(DiffNode):
         self._det_checked = False
 
     def _probe_frame(self) -> DataFrame:
-        return self._fn(self.inputs[0]._probe_frame())
+        p = self.inputs[0]._probe()
+        # a resident first step never advances this node: decide the
+        # fn's determinism here too, over a lineage-free frame of the
+        # input's schema — what an advance's (cut) input looks like
+        self._check_det(self._fn(_empty_frame(self.graph.spark,
+                                              p._jdf.schema())))
+        return self._fn(p)
 
     def _insert_only(self) -> bool:
         return self._sign_preserving and self.inputs[0]._insert_only()
 
-    def _advance(self, t: int) -> DataFrame:
-        out = self._fn(self.inputs[0].delta(t))
+    def _check_det(self, out: DataFrame) -> None:
         if not self._det_checked:
             # structural property of the fixed fn — decided once.  A
             # nondeterministic transform (F.rand()...) flips this node
@@ -1070,6 +1136,10 @@ class _LinearNode(DiffNode):
             self._det_checked = True
             if not _plan_deterministic(out):
                 self._CKPT_OUT = True   # instance attr shadows class
+
+    def _advance(self, t: int) -> DataFrame:
+        out = self._fn(self.inputs[0].delta(t))
+        self._check_det(out)
         return out
 
 
@@ -1083,7 +1153,7 @@ class _UnionNode(DiffNode):
         return a.unionByName(b.select(*a.columns))
 
     def _probe_frame(self) -> DataFrame:
-        a, b = (i._probe_frame() for i in self.inputs)
+        a, b = (i._probe() for i in self.inputs)
         return a.unionByName(b.select(*a.columns))
 
 
@@ -1219,10 +1289,15 @@ class _ThetaJoinNode(DiffNode):
     def _insert_only(self) -> bool:
         return all(i._insert_only() for i in self.inputs)
 
-    def _ensure_state(self, da: DataFrame, db: DataFrame) -> None:
+    def _ensure_stores(self, da: DataFrame, db: DataFrame) -> None:
         if self._sa is None:
             self._sa = self.graph._make_store(da)
             self._sb = self.graph._make_store(db)
+
+    def _probe_frame(self) -> DataFrame:
+        a, b = (i._probe() for i in self.inputs)
+        return consolidate(self._weighted(a, b, 0)).withColumn(
+            TIME, self.graph._probe_time())
 
     def _dband_init(self, da: DataFrame, db: DataFrame) -> None:
         """Decide ONCE whether (and how) the distributed probe bands.
@@ -1364,7 +1439,7 @@ class _ThetaJoinNode(DiffNode):
         da, db = self.inputs[0].delta(t), self.inputs[1].delta(t)
         da_e = self.inputs[0]._empty_at(t) and self._sa is not None
         db_e = self.inputs[1]._empty_at(t) and self._sb is not None
-        self._ensure_state(da, db)
+        self._ensure_stores(da, db)
         if not self._dband_done:
             self._dband_init(da, db)
         a_old, b_old = self._sa.get(), self._sb.get()
@@ -1412,13 +1487,21 @@ class _SemiAntiNode(DiffNode):
         self._sa: _StateStore | None = None
         self._sb: _StateStore | None = None
 
+    def _ensure_stores(self, da: DataFrame, db: DataFrame) -> None:
+        if self._sa is None:
+            self._sa = self.graph._make_store(da)
+            self._sb = self.graph._make_store(db)
+
+    def _probe_frame(self) -> DataFrame:
+        # every leg is a slice of the left state (or the left delta)
+        return consolidate(_multiset_tpl(self.inputs[0]._probe())) \
+            .withColumn(TIME, self.graph._probe_time())
+
     def _advance(self, t: int) -> DataFrame:
         da, db = self.inputs[0].delta(t), self.inputs[1].delta(t)
         da_e = self.inputs[0]._empty_at(t) and self._sa is not None
         db_e = self.inputs[1]._empty_at(t) and self._sb is not None
-        if self._sa is None:
-            self._sa = self.graph._make_store(da)
-            self._sb = self.graph._make_store(db)
+        self._ensure_stores(da, db)
         a_old, b_old = self._sa.get(), self._sb.get()
         lk, rk = self._lkeys, self._rkeys
 
@@ -1487,16 +1570,28 @@ def _trace_old(node, new: DataFrame, keys: list[str], touched: DataFrame,
     keys and negate those exact bytes (float-safe — see _ReduceNode).
     Requires every key column to appear in the op's output; otherwise
     fall back to `recompute_old()` (re-running the op on the old
-    slices), which is only byte-stable for deterministic ops."""
+    slices), which is only byte-stable for deterministic ops.  Nodes
+    without a store hook get their trace created here, on first use."""
     if set(keys) <= set(new.columns):
         if node._out_state is None:
-            node._out_state = node.graph._make_store(
-                new.withColumn(DIFF, F.lit(1).cast("long")),
-                key_cols=keys)
+            _op_out_store(node, new, keys)
         sl = _ns_semi(node._out_state.get(probe=touched, on=keys),
                       node._small(touched), keys)
         return consolidate(sl).withColumn(DIFF, -F.col(DIFF))
     return recompute_old().withColumn(DIFF, F.lit(-1).cast("long"))
+
+
+def _op_out_store(node, new: DataFrame, keys: list[str]) -> None:
+    """Create a keyed-recompute node's output trace from the op's
+    output template `new`, when the op keeps every key column."""
+    if set(keys) <= set(new.columns):
+        node._out_state = node.graph._make_store(new, key_cols=keys)
+
+
+def _op_probe(new: DataFrame, graph) -> DataFrame:
+    """Output probe of a keyed-recompute node: the op's output plus
+    weight, consolidated and stamped as `_emit_traced` does."""
+    return consolidate(new).withColumn(TIME, graph._probe_time())
 
 
 def _emit_traced(node, old: DataFrame, new: DataFrame, t: int) -> DataFrame:
@@ -1532,11 +1627,24 @@ class _KeyedRecomputeNode(DiffNode):
         self._sb: _StateStore | None = None
         self._out_state: _StateStore | None = None
 
-    def _advance(self, t: int) -> DataFrame:
-        da, db = self.inputs[0].delta(t), self.inputs[1].delta(t)
+    def _new_tpl(self, da: DataFrame, db: DataFrame) -> DataFrame:
+        return self._op(_expand(_multiset_tpl(da)),
+                        _expand(_multiset_tpl(db))) \
+            .withColumn(DIFF, F.lit(1).cast("long"))
+
+    def _ensure_stores(self, da: DataFrame, db: DataFrame) -> None:
         if self._sa is None:
             self._sa = self.graph._make_store(da, key_cols=self._lkeys)
             self._sb = self.graph._make_store(db, key_cols=self._rkeys)
+            _op_out_store(self, self._new_tpl(da, db), self._lkeys)
+
+    def _probe_frame(self) -> DataFrame:
+        a, b = (i._probe() for i in self.inputs)
+        return _op_probe(self._new_tpl(a, b), self.graph)
+
+    def _advance(self, t: int) -> DataFrame:
+        da, db = self.inputs[0].delta(t), self.inputs[1].delta(t)
+        self._ensure_stores(da, db)
         touched0 = (da.select(*[F.col(k) for k in self._lkeys])
                      .unionByName(db.select(
                          *[F.col(rk).alias(lk) for lk, rk
@@ -1596,11 +1704,21 @@ class _KeyedRecomputeUnaryNode(DiffNode):
         self._state: _StateStore | None = None
         self._out_state: _StateStore | None = None
 
+    def _new_tpl(self, tpl: DataFrame) -> DataFrame:
+        return self._op(_expand(_multiset_tpl(tpl))) \
+            .withColumn(DIFF, F.lit(1).cast("long"))
+
+    def _ensure_stores(self, tpl: DataFrame) -> None:
+        if self._state is None:
+            self._state = self.graph._make_store(tpl, key_cols=self._keys)
+            _op_out_store(self, self._new_tpl(tpl), self._keys)
+
+    def _probe_frame(self) -> DataFrame:
+        return _op_probe(self._new_tpl(self.inputs[0]._probe()), self.graph)
+
     def _advance(self, t: int) -> DataFrame:
         delta = self.inputs[0].delta(t)
-        if self._state is None:
-            self._state = self.graph._make_store(
-                delta, key_cols=self._keys)
+        self._ensure_stores(delta)
         touched = delta.select(*_ccs(self._keys)).distinct()
         state = self._state.get(probe=touched, on=self._keys)
         pair_free = (self._state._pair_free
@@ -1697,12 +1815,21 @@ class _ForgetNode(_WatermarkedNode):
     def _insert_only(self) -> bool:
         return (not self._retract) and self.inputs[0]._insert_only()
 
+    def _ensure_stores(self, tpl: DataFrame) -> None:
+        if self._wm is None:
+            self._wm_init(tpl, self._tcol)
+            if self._retract:
+                self._rows = self.graph._make_store(tpl)
+
+    def _probe_frame(self) -> DataFrame:
+        p = self.inputs[0]._probe()
+        if self._retract:     # passed rows ∪ expiries re-stamped
+            p = p.drop(TIME)
+        return p.withColumn(TIME, self.graph._probe_time())
+
     def _advance(self, t: int) -> DataFrame:
         d = self.inputs[0].delta(t)
-        if self._wm is None:
-            self._wm_init(d, self._tcol)
-            if self._retract:
-                self._rows = self.graph._make_store(d)
+        self._ensure_stores(d)
         _old_cut, cut = self._wm_cut(d, self._tcol, self._thr)
         # reference convention (table.py:671 forget / :852 ignore_late):
         # rows satisfying time <= max(time) − threshold are removed, so
@@ -1766,11 +1893,19 @@ class _BufferNode(_WatermarkedNode):
         # retraction pairs cancel INSIDE the buffer, never released
         return self.inputs[0]._insert_only()
 
+    def _ensure_stores(self, tpl: DataFrame) -> None:
+        if self._wm is None:
+            self._wm_init(tpl, self._wmcol)
+            self._pending = self.graph._make_store(tpl)
+
+    def _probe_frame(self) -> DataFrame:
+        # releases are consolidated pending rows
+        return consolidate(_multiset_tpl(self.inputs[0]._probe())) \
+            .withColumn(TIME, self.graph._probe_time())
+
     def _advance(self, t: int) -> DataFrame:
         d = self.inputs[0].delta(t)
-        if self._wm is None:
-            self._wm_init(d, self._wmcol)
-            self._pending = self.graph._make_store(d)
+        self._ensure_stores(d)
         old_cut, cut = self._wm_cut(d, self._wmcol, self._thr)
         if self._drop_late:
             d = (d.crossJoin(old_cut)
@@ -1812,6 +1947,39 @@ class _AsofNowNode(DiffNode):
         self._out_tpl: DataFrame | None = None
         self._exprs: tuple | None = None   # per-node cached Columns
 
+    def _frozen_schema(self, da: DataFrame, db: DataFrame) -> T.StructType:
+        """Row layout of the frozen matches (and of the trace): the left
+        columns, the right's non-left columns, a long weight."""
+        lcols = _data_cols(da)
+        l_by = {f.name: f for f in da.schema.fields}
+        r_by = {f.name: f for f in db.schema.fields}
+        return T.StructType(
+            [l_by[c] for c in lcols]
+            + [r_by[c] for c in _data_cols(db) if c not in lcols]
+            + [T.StructField(DIFF, T.LongType())])
+
+    def _out_frame(self, da: DataFrame, db: DataFrame) -> DataFrame:
+        return _empty_frame(self.graph.spark,
+                            self._frozen_schema(da, db)).withColumn(
+            TIME, self.graph._probe_time())
+
+    def _ensure_stores(self, da: DataFrame, db: DataFrame) -> None:
+        if self._sb is not None:
+            return
+        self._sb = self.graph._make_store(db)
+        self._lcols = _data_cols(da)
+        self._rcols = [c for c in _data_cols(db) if c not in self._lcols]
+        # a fresh empty frame, never a filtered join: checkpointing a
+        # template that still carries the l/r-aliased join plan trips a
+        # Catalyst AttributeMap bug ("key not found: <attr>") when the
+        # left lineage contains an explode
+        self._trace = self.graph._make_store(_empty_frame(
+            self.graph.spark, self._frozen_schema(da, db)))
+        self._out_tpl = self._out_frame(da, db)
+
+    def _probe_frame(self) -> DataFrame:
+        return self._out_frame(*(i._probe() for i in self.inputs))
+
     def _advance(self, t: int) -> DataFrame:
         # one-sided frontier sparsity (same as _JoinNode): a query-only
         # tick appends no empty right-state chunk, and a right-only
@@ -1828,11 +1996,7 @@ class _AsofNowNode(DiffNode):
                                 positive=self.inputs[1]._insert_only())
             return self._out_tpl
         da, db = self.inputs[0].delta(t), self.inputs[1].delta(t)
-        if self._sb is None:
-            self._sb = self.graph._make_store(db)
-            self._lcols = _data_cols(da)
-            self._rcols = [c for c in _data_cols(db)
-                           if c not in self._lcols]
+        self._ensure_stores(da, db)
         r_now = self._sb.get().unionByName(
             db.select(*_data_cols(self._sb.get()), DIFF))
         # net the left delta first: a same-batch +r/-r pair must freeze
@@ -1877,14 +2041,6 @@ class _AsofNowNode(DiffNode):
         a2 = a.select(*[a[c].alias(f"__l_{c}") for c in a.columns])
         b2 = b.select(*[b[c].alias(f"__r_{c}") for c in b.columns])
         frozen = a2.join(b2, on=cond, how="inner").select(*fro_sel)
-        if self._trace is None:
-            # fresh empty frame, NOT frozen.filter(False): checkpointing
-            # a template that still carries the l/r-aliased join plan
-            # trips a Catalyst AttributeMap bug ("key not found: <attr>")
-            # when the left lineage contains an explode — the rebuilt
-            # frame has the same schema and no join lineage
-            self._trace = self.graph._make_store(
-                self.graph.spark.createDataFrame([], frozen.schema))
         # left retraction: drop that left row's frozen outputs, exact
         # bytes from the trace.  NULL-SAFE equality on every left
         # column — plain left_semi `on=` uses EqualTo, under which a
@@ -1908,9 +2064,6 @@ class _AsofNowNode(DiffNode):
         if not db_e:
             self._sb.update(db, wide=wide, cut=False,
                             positive=self.inputs[1]._insert_only())
-        if self._out_tpl is None:
-            self._out_tpl = self.graph.spark.createDataFrame(
-                [], out.schema)
         return out
 
 
@@ -1939,7 +2092,7 @@ class _JoinNode(DiffNode):
         return (self.how == "inner"
                 and all(i._insert_only() for i in self.inputs))
 
-    def _ensure_state(self, da: DataFrame, db: DataFrame) -> None:
+    def _ensure_stores(self, da: DataFrame, db: DataFrame) -> None:
         if self._sa is None:
             # an ArrangedInput side reuses the shared arrangement (the
             # owner appends its deltas once per batch, after all pulls);
@@ -1950,6 +2103,12 @@ class _JoinNode(DiffNode):
             self._sb = sh_b or self.graph._make_store(db, key_cols=self.on)
             self._sa_shared = sh_a is not None
             self._sb_shared = sh_b is not None
+
+    def _probe_frame(self) -> DataFrame:
+        a, b = (i._probe() for i in self.inputs)
+        rcols = [c for c in _data_cols(b) if c not in self.on]
+        return self._weighted(a, b, self.on, rcols, 0).withColumn(
+            TIME, self.graph._probe_time())
 
     @staticmethod
     def _weighted(a: DataFrame, b: DataFrame, on: list[str],
@@ -1975,7 +2134,7 @@ class _JoinNode(DiffNode):
         # later batch's union scan)
         da_e = self.inputs[0]._empty_at(t) and self._sa is not None
         db_e = self.inputs[1]._empty_at(t) and self._sb is not None
-        self._ensure_state(da, db)
+        self._ensure_stores(da, db)
         # every leg of the bilinear rule + outer padding only touches
         # state rows under THIS batch's delta keys (either side), so a
         # disk-resident bucketed base prunes to those buckets
@@ -2341,12 +2500,6 @@ class _ReduceNode(DiffNode):
 
     def _advance_acc(self, delta: DataFrame, t: int) -> DataFrame:
         parts = self._part_cols()
-        if self._acc is None:
-            tpl = (delta.filter(F.lit(False))
-                   .groupBy(*self.keys).agg(*self._part_aggs()))
-            self._acc = self.graph._make_store(
-                tpl.withColumn(DIFF, F.lit(1).cast("long")),
-                key_cols=self.keys or None)
         d_parts = delta.groupBy(*self.keys).agg(*self._part_aggs())
         if self.keys:
             # no .distinct(): the keys frame only ever feeds broadcast
@@ -2372,9 +2525,6 @@ class _ReduceNode(DiffNode):
         new_acc = comb.filter(F.col("__pw_n") != 0)
         new_out = new_acc.select(*_ccs(self.keys), *self._finals(),
                                  _one_l().alias(DIFF))
-        if self._out_state is None:
-            self._out_state = self.graph._make_store(
-                new_out, key_cols=self.keys or None)
         otrace = self._out_state.get(probe=keys, on=self.keys or None)
         if keys is not None:
             otrace = _ns_semi(otrace, self._small(keys), self.keys)
@@ -2407,12 +2557,6 @@ class _ReduceNode(DiffNode):
         from pyspark.sql import Window as W
 
         parts = self._part_cols()
-        if self._acc is None:
-            tpl = (delta.filter(F.lit(False))
-                   .groupBy(*self.keys).agg(*self._part_aggs()))
-            self._acc = self.graph._make_store(
-                tpl.withColumn(DIFF, F.lit(1).cast("long")),
-                key_cols=self.keys or None)
         keys = delta.select(*_ccs(self.keys))
         acc_state = self._acc.get(probe=keys, on=self.keys)
         acc_slice = consolidate(_ns_semi(
@@ -2483,10 +2627,6 @@ class _ReduceNode(DiffNode):
              final_acc.select(*_ccs(self.keys), *_ccs(parts),
                               _one_l().alias(DIFF))],
             wide=wide)
-        if self._out_state is None:
-            self._out_state = self.graph._make_store(
-                out.drop(TIME).filter(F.lit(False)),
-                key_cols=self.keys or None)
         # the trace stores the NET emitted multiset: intermediate
         # -x/+x pairs across times cancel at its next consolidation
         self._out_state.update(out, wide=wide, cut=False)
@@ -2524,16 +2664,65 @@ class _ReduceNode(DiffNode):
         reduces keep the sub-step path)."""
         if not self.keys:
             return False
-        try:
-            probe = as_delta(self.inputs[0]._probe_frame())
-        except NotImplementedError:
-            return False
-        return self._acc_ok(probe) and not self._float_accs
+        # fed by linear operators only: another stateful node's per-time
+        # output is outside the fusion contract
+        stack = list(self.inputs)
+        while stack:
+            n = stack.pop()
+            if type(n) not in (SourceNode, _LinearNode, _UnionNode):
+                return False
+            stack.extend(n.inputs)
+        return self._acc_ok(self.inputs[0]._probe()) and not self._float_accs
+
+    _tpl_memo: tuple | None = None
+
+    def _templates(self, tpl: DataFrame) -> tuple:
+        """(accumulator strategy?, empty partials frame — keys +
+        `_part_cols` — or None, empty frame of the emitted rows — keys,
+        aggregates, long weight) for the input schema `tpl`.  Memoized
+        on the frame until `_ensure_stores` consumes it: a resident
+        first step asks for the input probe's twice."""
+        m = self._tpl_memo
+        if m is not None and m[0] is tpl:
+            return m[1]
+        acc = self._acc_ok(tpl)
+        parts = None
+        if acc:
+            parts = (tpl.filter(F.lit(False))
+                     .groupBy(*_ccs(self.keys)).agg(*self._part_aggs())
+                     .filter(F.lit(False)))
+            # finals over the partials' own layout: `_merge_parts` keeps
+            # every partial's type, so its analysis is not needed here
+            trace = parts.select(
+                *_ccs(self.keys), *self._finals(), _one_l().alias(DIFF))
+        else:
+            trace = self._aggregate(_multiset_tpl(tpl)).filter(F.lit(False))
+        self._tpl_memo = (tpl, (acc, parts, trace))
+        return acc, parts, trace
+
+    def _ensure_stores(self, tpl: DataFrame) -> None:
+        """Pick the strategy and create the stores: the accumulator (or
+        the input multiset) first, then the output trace."""
+        if self._strategy is not None:
+            return
+        acc, parts, trace = self._templates(tpl)
+        self._tpl_memo = None    # never pin a batch delta's lineage
+        self._strategy = "acc" if acc else "slice"
+        kc = self.keys or None
+        if acc:
+            self._acc = self.graph._make_store(
+                parts.withColumn(DIFF, _one_l()), key_cols=kc)
+        else:
+            self._state = self.graph._make_store(tpl, key_cols=kc)
+        self._out_state = self.graph._make_store(trace, key_cols=kc)
+
+    def _probe_frame(self) -> DataFrame:
+        _acc, _parts, trace = self._templates(self.inputs[0]._probe())
+        return consolidate(trace).withColumn(TIME, self.graph._probe_time())
 
     def _advance(self, t: int) -> DataFrame:
         delta = self.inputs[0].delta(t)
-        if self._strategy is None:
-            self._strategy = "acc" if self._acc_ok(delta) else "slice"
+        self._ensure_stores(delta)
         if getattr(self.graph, "_row_times_step", False):
             if self._strategy != "acc" or self._float_accs:
                 raise ValueError(
@@ -2542,9 +2731,6 @@ class _ReduceNode(DiffNode):
             return self._advance_acc_rowtimes(delta, t)
         if self._strategy == "acc":
             return self._advance_acc(delta, t)
-        if self._state is None:
-            self._state = self.graph._make_store(
-                delta, key_cols=self.keys or None)
         # the chunked state may carry uncompacted +x/-x pairs, which
         # corrupt order statistics AND float sums (a +1e16/-1e16
         # pair straddling a small value cancels catastrophically,
@@ -2581,9 +2767,6 @@ class _ReduceNode(DiffNode):
         # weights, order statistics ignore them, and _expand replicates
         # by (all-positive) multiplicity
         new_out = self._aggregate(new_in)
-        if self._out_state is None:
-            self._out_state = self.graph._make_store(
-                new_out, key_cols=self.keys or None)
         otrace = self._out_state.get(probe=keys, on=self.keys or None)
         if self.keys:
             otrace = _ns_semi(otrace, self._small(keys), self.keys)
@@ -2610,11 +2793,19 @@ class _DistinctNode(DiffNode):
         super().__init__(graph, [parent])
         self._state: _StateStore | None = None
 
-    def _advance(self, t: int) -> DataFrame:
-        delta = self.inputs[0].delta(t)
+    def _ensure_stores(self, tpl: DataFrame) -> None:
         if self._state is None:
             self._state = self.graph._make_store(
-                delta, key_cols=_data_cols(delta))
+                tpl, key_cols=_data_cols(tpl))
+
+    def _probe_frame(self) -> DataFrame:
+        p = self.inputs[0]._probe()
+        return p.select(*_ccs(_data_cols(p)), _one_l().alias(DIFF),
+                        self.graph._probe_time().alias(TIME))
+
+    def _advance(self, t: int) -> DataFrame:
+        delta = self.inputs[0].delta(t)
+        self._ensure_stores(delta)
         cols = [c for c in self._state._cols if c != DIFF]
         touched = delta.select(*_ccs(cols)).distinct()
         state = self._state.get(probe=touched, on=cols)
@@ -2793,6 +2984,34 @@ class DifferentialGraph:
     @property
     def _wide_batch(self) -> bool:
         return not self._stepped or self._batch_wide
+
+    def _probe_time(self) -> Column:
+        """The batch-time literal stateful nodes stamp (`F.lit(t)`) as
+        probes see it: the current clock, so a probe's time column has
+        the width (int or long) the batch's own stamp gets."""
+        return F.lit(max(self._t, 0))
+
+    def _probe_time_long(self) -> bool:
+        return not -2 ** 31 <= max(self._t, 0) < 2 ** 31
+
+    def _prime_fresh(self, order: Sequence[DiffNode]) -> bool:
+        """Ready a fresh graph's requested subgraph (`order`: inputs
+        before consumers) for a resident first step: every node's
+        `_empty_tpl` from its probe — the memo a distributed first
+        batch would set — and every stateful node's stores, both by
+        analysis alone (no batch, no Spark job).  `order` is the
+        post-order a distributed first batch advances nodes in, so the
+        stores are numbered as a later restore numbers them.  False,
+        with nothing changed, when some schema cannot be derived."""
+        try:
+            schemas = [n._probe()._jdf.schema() for n in order]
+        except Exception:
+            return False
+        for n, schema in zip(order, schemas):
+            n._ensure_stores(*(i._probe() for i in n.inputs))
+            if n._empty_tpl is None:
+                n._empty_tpl = _empty_frame(self.spark, schema)
+        return True
 
     def _make_store(self, template: DataFrame,
                     key_cols: list[str] | None = None) -> _StateStore:
@@ -3105,14 +3324,14 @@ class DifferentialGraph:
         # OOM.  Scoping it to only the post-step action was tried and
         # reverted: state chunks that only materialize inside
         # step-internal jobs (e.g. the acc-reduce chunk) then never
-        # truncate and wide serving graphs compound again.
+        # truncate and wide serving graphs compound again.  A resident
+        # tick checkpoints nothing, so the property is set below, once
+        # the step is known to run distributed (one JVM call less on
+        # every resident tick).
         trunc = (not self._stepped
                  or self._steps_seen % max(1, self.truncate_every) == 0)
         self._steps_seen += 1
         self._trunc_this_step = trunc
-        self.spark.sparkContext.setLocalProperty(
-            "spark.checkpoint.checkpointAllMarkedAncestors",
-            "true" if trunc else None)
         unknown = set(deltas) - set(self._sources)
         if unknown:
             raise KeyError(f"unknown sources: {sorted(unknown)}")
@@ -3130,16 +3349,23 @@ class DifferentialGraph:
                     "time instead")
         self._row_times_step = row_times
         nodes = [outputs] if isinstance(outputs, DiffNode) else list(outputs)
-        # resident fast path: steady micro-batches over capable
-        # subgraphs run driver-side (resident.py) — no planning, no
-        # micro-jobs; anything ineligible falls through unchanged
-        if self.resident and self._stepped and not row_times:
+        # resident fast path: micro-batches over capable subgraphs run
+        # driver-side (resident.py) — no planning, no micro-jobs.  A
+        # fresh graph's first delta (no restored clock) follows the same
+        # rule as every later tick: it runs resident when it fits the
+        # caps, as the first delta into empty arrangements.  Anything
+        # ineligible falls through to the distributed path unchanged
+        if self.resident and not row_times:
             if self._res_engine is None:
                 from .resident import ResidentEngine
                 self._res_engine = ResidentEngine(self)
             res = self._res_engine.try_tick(nodes, deltas, t,
-                                            rows_out=_rows_out)
+                                            rows_out=_rows_out,
+                                            fresh=not self._stepped)
             if res is not None:
+                # a resident first step leaves every store empty (the
+                # mirrors hold the state): no initial load to compact
+                self._stepped = True
                 return res
         if self._res_engine is not None and self._res_engine.mirrors:
             # falling back to the distributed path: fold every mirror
@@ -3148,6 +3374,9 @@ class DifferentialGraph:
             # Keyed on MIRRORS, not the active flag — a phase-1 abort
             # can leave mirrors attached without ever going active
             self._res_engine.detach()
+        self.spark.sparkContext.setLocalProperty(
+            "spark.checkpoint.checkpointAllMarkedAncestors",
+            "true" if trunc else None)
         if coerced is not None:
             # row-fed sources on a distributed tick: one Arrow-backed
             # LocalRelation per source
@@ -3186,9 +3415,11 @@ class DifferentialGraph:
             self._row_times_step = False
         if not self._stepped:
             self._stepped = True
-            # the initial load is usually the one WIDE batch: fold it
-            # into each store's consolidated base now (full-parallelism
-            # shuffle once) so steady-state scans see base + tiny chunks
+            # a first step that ran distributed is an initial load over
+            # the caps (or past a non-resident operator), usually the
+            # one WIDE batch: fold it into each store's consolidated
+            # base now (full-parallelism shuffle once) so steady-state
+            # scans see base + tiny chunks
             for st in self._stores:
                 st.compact()
         return out

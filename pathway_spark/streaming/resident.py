@@ -30,7 +30,12 @@ Scale contract — the 100 TB story is unchanged:
   exactly as before.  The caps make residency self-selecting: micro
   deltas against bounded hot state run at driver speed, anything bulk
   runs distributed;
-- wide batches (initial load, backlog bursts) always run distributed;
+- wide batches (backlog bursts, bulk initial loads) always run
+  distributed.  A fresh graph's first delta follows the same rule as
+  every later tick: it runs resident when it fits the caps, as the
+  first delta into empty mirrors (schemas and stores come from the
+  nodes' probes, no batch needed) — a bulk initial load above the caps
+  still runs distributed and compacts;
 - mirrors are a LATENCY device, not a state backend: any distributed
   consumer (a fallback tick, ``commit``/``flush``, compaction) first
   synchronizes mirror rows back into the store's chunk list as one
@@ -429,6 +434,10 @@ class _StoreMirror:
         chunks are JVM-backed (checkpointed RDDs / LocalRelations /
         parquet), never the Python-parallelized frames that make
         coalesce pathological."""
+        if self.store._never_written():
+            # nothing to read (a fresh graph's first step): admit the
+            # empty mirror without scheduling a job
+            return True
         cap = self.eng.graph.RESIDENT_MAX_STATE_ROWS
         df = self.store.get()
         rows = df.coalesce(1).limit(cap + 1).collect()
@@ -1990,12 +1999,17 @@ class ResidentEngine:
         # ensure() -> bool and advance(t, *input_deltas) -> RDelta
         return hasattr(n, "_res_kernel")
 
-    def eligible(self, nodes) -> bool:
+    def eligible(self, nodes, fresh: bool = False) -> bool:
         """Positive verdicts are cached per requested set; negative
         ones re-walk each tick (a reduce's strategy or a node's schema
-        memo appears after its first distributed batch)."""
+        memo appears after its first distributed batch).  `fresh` (a
+        fresh graph's first step, before any memo exists) asks for
+        built-in kernels only: those derive their schemas and stores
+        from probes (`DiffNode._probe_frame`, `_ensure_stores`), while
+        extension kernels (iterate, custom nodes) keep the distributed
+        first step."""
         key = tuple(sorted(id(n) for n in nodes))
-        if self._elig.get(key):
+        if not fresh and self._elig.get(key):
             return True
         from . import differential as D
         seen, stack = set(), list(nodes)
@@ -2006,44 +2020,66 @@ class ResidentEngine:
             seen.add(id(n))
             if not self._node_capable(n):
                 return False
-            if n._empty_tpl is None and not isinstance(n, D.SourceNode):
+            if fresh:
+                if hasattr(n, "_res_kernel"):
+                    return False
+            elif n._empty_tpl is None and not isinstance(n, D.SourceNode):
                 return False    # no schema memo yet (1st batch pending)
             stack.extend(n.inputs)
-        self._elig[key] = True
+        if not fresh:
+            self._elig[key] = True
         return True
 
     # -- tick driver ------------------------------------------------------------
 
     def try_tick(self, nodes, deltas: dict[str, DataFrame], t: int,
-                 rows_out: bool = False) -> list | None:
-        res = self._try_tick(nodes, deltas, t, rows_out)
+                 rows_out: bool = False, fresh: bool = False) -> list | None:
+        res = self._try_tick(nodes, deltas, t, rows_out, fresh)
         if res is None:
             STATS["fallback_ticks"] += 1
         return res
 
     def _try_tick(self, nodes, deltas: dict[str, DataFrame], t: int,
-                  rows_out: bool = False) -> list | None:
+                  rows_out: bool = False, fresh: bool = False
+                  ) -> list | None:
+        """`fresh`: the graph's first step (no restored clock).  It runs
+        resident under the same caps as any tick, after the probes
+        prime every node's schema and stores (`_prime_fresh`); a fresh
+        step that cannot run resident starts no cooldown, since the
+        distributed first step it falls back to is no residency
+        failure."""
         g = self.graph
         if self._cooldown > 0:
             self._cooldown -= 1
             return None
-        if not self.eligible(nodes):
+        cap = g.RESIDENT_MAX_DELTA_ROWS
+        # sizes first: an over-cap driver-held initial load derives no
+        # schema and runs no job here
+        if fresh and any(isinstance(df, LocalRows) and len(df) > cap
+                         for df in deltas.values()):
             return None
+        if not self.eligible(nodes, fresh):
+            return None
+        cooldown = 0 if fresh else self.COOLDOWN_TICKS
 
         # ---- phase 1: abort-safe (no state mutated) ----
         feeds: dict[str, RDelta] = {}
-        cap = g.RESIDENT_MAX_DELTA_ROWS
         for name, df in deltas.items():
             src = g._sources[name]
-            d = self._feed_delta(src, df, t, cap)
+            d = self._feed_delta(src, df, t, cap, bounded=fresh)
             if d is None:
-                self._cooldown = self.COOLDOWN_TICKS
+                self._cooldown = cooldown
                 return None
             feeds[name] = d
+        order = self._topo(nodes)
+        # the probes prime schemas and create the (empty) stores —
+        # equivalent to what a distributed first step would create
+        # before reading anything, so a later abort stays safe
+        if fresh and not g._prime_fresh(order):
+            return None
         # walk the subgraph; make sure every NON-EMPTY stateful node
         # has a mirror (building them collects state — still read-only)
         fed = {id(g._sources[n]) for n, d in feeds.items() if d.rows}
-        order = self._topo(nodes)
         nonempty: set[int] = set()
         for n in order:
             from . import differential as D
@@ -2059,21 +2095,27 @@ class ResidentEngine:
                     # was over cap) — drop them, or the distributed
                     # fallback tick would trip the store-update guard
                     self.detach()
-                    self._cooldown = self.COOLDOWN_TICKS
+                    self._cooldown = cooldown
                     return None
         for m in self.mirrors.values():
             if (m.n_rows > g.RESIDENT_MAX_STATE_ROWS
                     or m.est_bytes > g.RESIDENT_MAX_STATE_BYTES):
                 self.events["cap_detaches"] += 1
                 self.detach()
-                self._cooldown = self.COOLDOWN_TICKS
+                self._cooldown = cooldown
                 return None
 
-        # same session-conf contract as distributed steady ticks (the
-        # feed-collect micro-jobs run under the tuned confs, and the
-        # snapshot/restore protocol stays observable to callers)
+        # same session-conf contract as the distributed path: steady
+        # ticks tune (the feed-collect micro-jobs run under the tuned
+        # confs), a first step restores the session's own confs — the
+        # snapshot/restore protocol stays observable to callers.  A
+        # session snapshot means the tuning is applied and not restored
+        # since: re-setting it would only cost JVM calls every tick
         if g._tune_steady:
-            g._apply_steady_confs()
+            if g._wide_batch:
+                g.restore_session_confs()
+            elif getattr(g.spark, g._SAVED_CONF_ATTR, None) is None:
+                g._apply_steady_confs()
 
         # ---- phase 2: advance (mutating) ----
         self.active = True
@@ -2101,7 +2143,10 @@ class ResidentEngine:
         return outs
 
     def _feed_delta(self, src, df: DataFrame | None, t: int,
-                    cap: int) -> RDelta | None:
+                    cap: int, bounded: bool = False) -> RDelta | None:
+        """The source's delta as driver rows, or None when it is over
+        the cap or wide.  `bounded` (a fresh graph's first step, which
+        may be a bulk initial load) collects at most cap + 1 rows."""
         from . import differential as D
         tpl_cols = D._data_cols(src._template)
         cols = tpl_cols + [DIFF, TIME]
@@ -2136,7 +2181,10 @@ class ResidentEngine:
         # job, and the caps bound what a non-wide plan can return.
         try:
             qe = d._jdf.queryExecution()
-            if "Exchange" in qe.executedPlan().toString():
+            if qe.optimizedPlan().getClass().getSimpleName() \
+                    == "LocalRelation":
+                pass    # driver-held rows: never wide, collect job-free
+            elif "Exchange" in qe.executedPlan().toString():
                 if len(df.inputFiles()) > 64:
                     return None
             elif d.rdd.getNumPartitions() > 64:
@@ -2146,12 +2194,15 @@ class ResidentEngine:
             # was tried and reverted: on Python-parallelized parents it
             # serializes one Python-worker launch per parent partition
             # into a single task — 15x slower than the parallel scan.)
-            rows = d.collect()
+            # A first step's feed is an initial load of unknown size:
+            # the limit keeps an over-cap one off the driver, at the
+            # price of CollectLimit's incremental scans on that one tick
+            rows = collect_rows(d.limit(cap + 1) if bounded else d)
         except Exception:
             return None
         if len(rows) > cap:
             return None
-        return RDelta(cols, [_norm_row(r) for r in rows])
+        return RDelta(cols, rows)
 
     def _topo(self, nodes) -> list:
         order, seen = [], set()
@@ -2282,6 +2333,10 @@ class ResidentEngine:
             head = head.inputs[0]
         chain.reverse()
         cur = self._delta(head, t)
+        if not cur.rows:
+            # row-wise operators map nothing to nothing: no fold, no
+            # Python pass (the other input side of a serving tick)
+            return RDelta(D._data_cols(n._empty_tpl) + [DIFF, TIME], [])
         schema = self._node_schema(head)
         fns: list = []
 
@@ -2594,6 +2649,13 @@ class ResidentEngine:
     def _to_df(self, n, d: RDelta) -> DataFrame:
         schema = self._reorder_schema(self._node_schema(n), d.cols)
         return rows_to_df(self.spark, d.rows, schema)
+
+    def memo_df(self, n, t: int) -> DataFrame | None:
+        """The delta node `n` emitted on resident tick `t` — also an
+        interior node of the requested subgraph — or None when the tick
+        did not evaluate it."""
+        m = self._memo.get(id(n))
+        return None if m is None or m[0] != t else self._to_df(n, m[1])
 
     # -- teardown ------------------------------------------------------------------
 

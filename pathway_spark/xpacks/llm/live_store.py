@@ -97,8 +97,10 @@ class LiveDocumentStore:
         # rows in, rows out: the query delta feeds as LocalRows (zero
         # Spark involvement on a resident tick) and the ranked answer
         # comes back as driver tuples via step_rows — the reference's
-        # arrangement-probe serving shape; a distributed tick (first
-        # query, cap fallback) transparently pays the classic path
+        # arrangement-probe serving shape.  A fresh store's first
+        # delta runs resident too when it fits the caps; a distributed
+        # tick (over-cap load, the first query after a restore, cap
+        # fallback) transparently pays the classic path
         feed = (["query_id", "query"],
                 [(base + i, q) for i, q in enumerate(queries)])
         ((cols, rows),) = self._g.step_rows(self._out, queries=feed)

@@ -13,6 +13,7 @@ the distributed accumulator's own docstring)."""
 
 from __future__ import annotations
 
+import functools
 import random
 
 import pytest
@@ -27,12 +28,24 @@ def _trace(rows) -> list[tuple]:
 
 
 def _drive(spark, build, ticks, *, resident, state_dir=None,
-           collect_active=False):
+           collect_active=False, first="auto"):
     """Build the graph, run batch 0 + the given ticks, return the
-    per-tick sorted traces (and whether each tick ran resident)."""
+    per-tick sorted traces (and whether each tick ran resident).
+
+    A fresh graph's batch 0 runs resident when it fits the caps, so the
+    steady ticks start from empty mirrors.  `first="distributed"`
+    forces batch 0 onto the distributed path by lowering the documented
+    per-instance RESIDENT_MAX_DELTA_ROWS for that step only: the first
+    resident tick then admits its mirrors from compacted, populated
+    stores."""
     g = DifferentialGraph(spark, resident=resident, state_dir=state_dir)
     out, feeds0 = build(g)
+    if first == "distributed":
+        g.RESIDENT_MAX_DELTA_ROWS = 0
     (d0,) = g.step(out, **feeds0)
+    if first == "distributed":
+        del g.RESIDENT_MAX_DELTA_ROWS     # back to the class cap
+        assert g._res_last_t != g._t
     traces = [_trace(d0.collect())]
     active = []
     for feeds in ticks:
@@ -77,18 +90,18 @@ def _mk_ticks(spark, rows0, nticks, *, rng, nk=50, schema=None):
     return ticks
 
 
-def test_join_reduce_acc_equivalence(spark):
+def test_join_reduce_acc_equivalence(spark, first="auto"):
     rng = random.Random(11)
     build, rows0 = _orders_build(spark)
     ticks = _mk_ticks(spark, rows0, 8, rng=rng)
     _, _, tr_res, act = _drive(spark, build, ticks, resident=True,
-                               collect_active=True)
+                               collect_active=True, first=first)
     _, _, tr_cls = _drive(spark, build, ticks, resident=False)
     assert tr_res == tr_cls
     assert all(act), "resident engine silently fell back on a steady tick"
 
 
-def test_slice_reduce_equivalence(spark):
+def test_slice_reduce_equivalence(spark, first="auto"):
     """min/max/count_distinct force the slice strategy; retractions
     must re-derive order statistics from the surviving multiset."""
     rng = random.Random(5)
@@ -116,7 +129,8 @@ def test_slice_reduce_equivalence(spark):
         ticks.append(dict(o=spark.createDataFrame(
             ins + dels, "k long, g long, v long, s string, _pw_diff long")))
 
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
 
@@ -153,7 +167,7 @@ def test_distinct_union_flatten_equivalence(spark):
     assert a == b
 
 
-def test_distinct_node_equivalence(spark):
+def test_distinct_node_equivalence(spark, first="auto"):
     base = spark.createDataFrame([(i % 5, f"v{i % 3}") for i in range(40)],
                                  "a long, s string")
 
@@ -171,7 +185,8 @@ def test_distinct_node_equivalence(spark):
     for p in payloads:
         ticks.append(dict(d=spark.createDataFrame(
             p, "a long, s string, _pw_diff long")))
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
 
@@ -310,7 +325,7 @@ def test_caps_route_to_distributed(spark):
 
 
 @pytest.mark.parametrize("anti", [False, True], ids=["semi", "anti"])
-def test_semi_anti_equivalence(spark, anti):
+def test_semi_anti_equivalence(spark, anti, first="auto"):
     """Presence flips (0↔>0) through right-side churn, null keys, and
     left deltas gating on the new presence."""
     left0 = spark.createDataFrame(
@@ -338,12 +353,13 @@ def test_semi_anti_equivalence(spark, anti):
              a=spark.createDataFrame([(0, "back", 1)], lsch)),
         dict(a=spark.createDataFrame([(7, "new7", -1)], lsch)),
     ]
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
 
 
-def test_asof_now_equivalence(spark):
+def test_asof_now_equivalence(spark, first="auto"):
     """Freeze-at-arrival: later right churn never retracts frozen
     matches; left retractions replay exact trace bytes."""
     docs0 = spark.createDataFrame(
@@ -372,12 +388,13 @@ def test_asof_now_equivalence(spark):
         dict(docs=spark.createDataFrame([(2, "late2", 1.0, 1)], dsch),
              qs=spark.createDataFrame([(4, 2, 1)], qsch)),
     ]
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
 
 
-def test_keyed_recompute_sort_equivalence(spark):
+def test_keyed_recompute_sort_equivalence(spark, first="auto"):
     """keyed_recompute (per-instance lag/lead sort) through inserts
     and retractions: the user op runs through Spark in both paths;
     resident must replay exact trace bytes for retractions."""
@@ -407,7 +424,8 @@ def test_keyed_recompute_sort_equivalence(spark):
         dict(t=spark.createDataFrame([(102, 1, 25, 1), (4, 1, 18, -1)],
                                      sch)),
     ]
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
 
@@ -454,7 +472,7 @@ def test_binary_keyed_recompute_asof_equivalence(spark):
 
 
 @pytest.mark.parametrize("how", ["left", "right", "outer"])
-def test_outer_join_equivalence(spark, how):
+def test_outer_join_equivalence(spark, how, first="auto"):
     """Presence-flip padding: probe keys appearing/vanishing retract/
     emit null-padded rows; fresh kept rows pad under absent keys; null
     keys always pad (EqualTo semantics)."""
@@ -480,13 +498,14 @@ def test_outer_join_equivalence(spark, how):
              a=spark.createDataFrame([(0, "back", 1)], lsch)),  # mixed
         dict(a=spark.createDataFrame([(6, "n6", -1)], lsch)),
     ]
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
 
 
 @pytest.mark.parametrize("mode", ["ignore_late", "forget", "buffer"])
-def test_watermark_behaviors_equivalence(spark, mode):
+def test_watermark_behaviors_equivalence(spark, mode, first="auto"):
     """Watermark cuts, NULL times, late rows, and (forget) horizon
     evictions / (buffer) releases across watermark jumps."""
     base = spark.createDataFrame(
@@ -513,9 +532,30 @@ def test_watermark_behaviors_equivalence(spark, mode):
         dict(d=spark.createDataFrame([(24, 495, "edge", 1),
                                       (20, 95, "fresh", -1)], sch)),
     ]
-    _, _, a = _drive(spark, build, ticks, resident=True)
+    _, _, a = _drive(spark, build, ticks, resident=True,
+                     first=first)
     _, _, b = _drive(spark, build, ticks, resident=False)
     assert a == b
+
+
+@pytest.mark.parametrize("check", [
+    test_join_reduce_acc_equivalence,
+    test_slice_reduce_equivalence,
+    test_distinct_node_equivalence,
+    functools.partial(test_semi_anti_equivalence, anti=True),
+    test_asof_now_equivalence,
+    test_keyed_recompute_sort_equivalence,
+    functools.partial(test_outer_join_equivalence, how="outer"),
+    functools.partial(test_watermark_behaviors_equivalence, mode="forget"),
+    functools.partial(test_watermark_behaviors_equivalence, mode="buffer"),
+], ids=["join_acc_reduce", "slice_reduce", "distinct", "anti_join",
+        "asof_now", "keyed_recompute", "outer_join", "forget", "buffer"])
+def test_equivalence_with_batch0_distributed(spark, check):
+    """The equivalence drives above run batch 0 resident (fresh graphs
+    start from empty mirrors).  Forcing batch 0 distributed keeps the
+    other admission path covered: mirrors loaded from compacted,
+    populated stores on the first steady tick."""
+    check(spark, first="distributed")
 
 
 def test_watermark_timestamp_threshold_equivalence(spark):

@@ -258,7 +258,11 @@ def test_monitoring_differential_topology(spark):
     g = DifferentialGraph(spark, resident=True)
     out = (g.source("mon_topo_src", base).filter(F.col("k") >= 0)
             .reduce(["g"], n=("count",)))
+    # a first step within the caps would run resident: lower the
+    # per-instance delta cap for it so both paths show up
+    g.RESIDENT_MAX_DELTA_ROWS = 0
     g.step(out, mon_topo_src=base)                      # distributed
+    del g.RESIDENT_MAX_DELTA_ROWS
     g.step(out, mon_topo_src=spark.createDataFrame(     # resident
         [(500, 1, 1)], "k long, g long, _pw_diff long"))
     assert g._res_last_t == g._t
